@@ -26,11 +26,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dedup_arbitrary(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Reference-equivalent ``dropDuplicates(keys)`` (batch D2)."""
-    return df.dropDuplicates(list(keys))
-
-
 def dedup_deterministic(
     df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | str]
 ) -> DataFrame:

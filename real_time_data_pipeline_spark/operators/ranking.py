@@ -536,6 +536,8 @@ def grouped_percentile_cont(
     Returns one row per group: ``group_by`` + ``out_cols[i]`` (double)
     = the ``pcts[i]`` percentile.
     """
+    if not pcts:
+        raise ValueError("pcts must name at least one percentile")
     if len(pcts) != len(out_cols):
         raise ValueError("pcts and out_cols must pair up")
     spark = df.sparkSession

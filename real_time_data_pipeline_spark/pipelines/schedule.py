@@ -30,7 +30,7 @@ from collections.abc import Callable, Mapping, Sequence
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 # Terminal task states.
@@ -150,7 +150,7 @@ def run_dag(
 
 def hourly_station_dag(
     spark: SparkSession,
-    raw: DataFrame,
+    bronze_path: str,
     silver_path: str,
     gold_path: str,
     ds: str,
@@ -162,10 +162,11 @@ def hourly_station_dag(
 
     Tasks mirror `dags/gbfs_pipeline_dag.py`:
 
-    - ``daily_batch_backfill``: normalize → silver → gold for date
-      ``ds`` ONLY, written with dynamic partition overwrite (re-runs
-      replace exactly that day — the reference overwrote the whole
-      path, SURVEY §2.2 K6).
+    - ``daily_batch_backfill``: `jobs.backfill.run` over the bronze
+      parquet at ``bronze_path`` (the reference DAG's ``--bronze-path``,
+      `:38-55`): normalize → silver → gold for date ``ds`` ONLY, written
+      with dynamic partition overwrite (re-runs replace exactly that
+      day — the reference overwrote the whole path, SURVEY §2.2 K6).
     - ``soda_scan_gold`` (trigger_rule=all_done): engine-native DQ
       checks over the gold table; returns the checks DataFrame
       collected to rows. Raises if any check failed, so the DAG run
@@ -176,26 +177,12 @@ def hourly_station_dag(
     Returns (tasks, deps) for `run_dag`, so callers can extend the
     graph before running.
     """
-    from real_time_data_pipeline_spark.pipelines.station_status import (
-        gold_checks,
-        normalize_raw,
-        to_gold,
-        to_silver,
-    )
-    from real_time_data_pipeline_spark.sources.sinks import (
-        drop_partitions_older_than,
-        write_parquet_partitioned,
-    )
+    from real_time_data_pipeline_spark.jobs.backfill import run as run_backfill
+    from real_time_data_pipeline_spark.pipelines.station_status import gold_checks
+    from real_time_data_pipeline_spark.sources.sinks import drop_partitions_older_than
 
     def backfill() -> int:
-        silver = to_silver(normalize_raw(raw)).withColumn(
-            "date", F.to_date(F.col("event_ts"))
-        )
-        day = silver.where(F.col("date") == F.lit(ds))
-        write_parquet_partitioned(day, silver_path, "date")
-        gold = to_gold(day).withColumn("date", F.to_date(F.col("window_start")))
-        write_parquet_partitioned(gold, gold_path, "date")
-        return gold.count()
+        return run_backfill(spark, ds, bronze_path, silver_path, gold_path)
 
     def soda_scan() -> list:
         gold = spark.read.parquet(gold_path).where(F.col("date") == F.lit(ds))

@@ -36,6 +36,8 @@ from real_time_data_pipeline_spark.operators.windows import windowed_agg
 DEDUP_KEYS = ["station_id", "last_reported"]
 FLAG_COLS = ["is_installed", "is_renting", "is_returning"]
 COUNT_COLS = ["num_bikes_available", "num_ebikes_available", "num_docks_available"]
+# Event-time lateness bound for streaming dedup state and gold windows.
+WATERMARK_DELAY = "2 hours"
 
 
 def normalize_raw(raw: DataFrame) -> DataFrame:
@@ -56,35 +58,33 @@ def normalize_raw(raw: DataFrame) -> DataFrame:
     )
 
 
-def to_silver(bronze: DataFrame, watermark_delay: str = "2 hours") -> DataFrame:
-    """Silver: event_ts, normalized flags, guarded ratio, dedup.
+def to_silver(bronze: DataFrame) -> DataFrame:
+    """Silver: event_ts, guarded ratio, dedup over `normalize_raw` output
+    (flags are already boolean).
 
     Streaming input → watermark-bounded dedup (fixes reference D1);
     batch input → deterministic keep-latest dedup (fixes D2).
     """
     df = bronze.withColumn("event_ts", epoch_to_ts("last_reported"))
-    for c in FLAG_COLS:
-        df = df.withColumn(c, normalize_bool(c))
     df = df.withColumn(
         "pct_bikes_available",
         guarded_ratio("num_bikes_available", "num_bikes_available", "num_docks_available"),
     )
     if df.isStreaming:
-        return dedup_stream(df, DEDUP_KEYS, "event_ts", watermark_delay)
+        return dedup_stream(df, DEDUP_KEYS, "event_ts", WATERMARK_DELAY)
     return dedup_deterministic(
         df, DEDUP_KEYS, [F.desc("event_ts")] + [F.desc(c) for c in COUNT_COLS]
     )
 
 
-def to_gold(silver: DataFrame, watermark_delay: str = "2 hours") -> DataFrame:
+def to_gold(silver: DataFrame) -> DataFrame:
     """Gold: 15-min tumbling per-station averages, window flattened.
 
     Output schema matches the reference's Postgres gold table
-    (schemas.GOLD_SCHEMA / `soda/checks/checks_gold.yml:4`).
+    (schemas.GOLD_SCHEMA / `soda/checks/checks_gold.yml:4`). A streaming
+    input comes from `to_silver`, whose dedup already defined the
+    watermark, so no second one is set here.
     """
-    from real_time_data_pipeline_spark.streaming.pipeline import has_watermark
-
-    need_wm = silver.isStreaming and not has_watermark(silver)
     out = windowed_agg(
         silver,
         event_time="event_ts",
@@ -95,7 +95,6 @@ def to_gold(silver: DataFrame, watermark_delay: str = "2 hours") -> DataFrame:
             "avg_bikes": F.avg("num_bikes_available"),
             "avg_docks": F.avg("num_docks_available"),
         },
-        watermark_delay=watermark_delay if need_wm else None,
     )
     return out.select(
         "station_id",

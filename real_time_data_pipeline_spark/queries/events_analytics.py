@@ -1174,7 +1174,7 @@ def q_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct(test)|. The NOT NULL guard (VERDICT r15 #4) pins the
     # old inner-join semantics: NULL ≠ NULL in a join, so a NULL
     # user_id appearing on both sides must NOT count as shared the
-    # way a NULL GROUP would (tests/test_properties.py pins it).
+    # way a NULL GROUP would (tests/test_operators.py pins it).
     overlap = (
         assigned.where(F.col("user_id").isNotNull())
         .groupBy("user_id")

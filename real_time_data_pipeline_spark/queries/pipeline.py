@@ -7,8 +7,9 @@ unknown→NULL (P4), guarded ratio (P6), deterministic dedup (D2 fixed),
 15-minute tumbling-window grouped averages with the window struct
 flattened (A1/A2 + P7), and Soda-style DQ checks (A4).
 
-Every query here has a DuckDB oracle; the streaming twins of these
-transforms live in ``real_time_data_pipeline_spark.streaming`` and are
+Every query here has a DuckDB oracle; the station feed's
+batch/stream-polymorphic stages live in
+``real_time_data_pipeline_spark.pipelines.station_status`` and are
 pytest-verified for batch/stream parity instead (not SQL-expressible).
 """
 

@@ -43,9 +43,7 @@ _DEFAULTS = {
     # auto-broadcast threshold: dims like region/nation/supplier must
     # broadcast, never shuffle (10 MiB default is fine; be explicit)
     "spark.sql.autoBroadcastJoinThreshold": "10485760",
-    # streaming micro-batches should not inherit batch shuffle width
     "spark.sql.streaming.statefulOperator.checkCorrectness.enabled": "true",
-    "spark.sql.shuffle.partitions": "32",
     # Cap in-flight UI/event history memory in long local runs.
     "spark.ui.enabled": "false",
     # Reliable-checkpoint files (operators/materialize.py) are deleted

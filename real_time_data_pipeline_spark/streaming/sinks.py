@@ -1,4 +1,4 @@
-"""Streaming sinks: parquet append, idempotent upsert, multi-sink fan-out.
+"""Streaming sinks: parquet append, idempotent upsert.
 
 Reference sinks rebuilt (SURVEY §2.2):
 - K2/K3 parquet append + checkpoint → `parquet_append_sink`;
@@ -7,8 +7,9 @@ Reference sinks rebuilt (SURVEY §2.2):
   an IDEMPOTENT merge keyed on the window identity: re-delivered
   micro-batches and update-mode re-emissions overwrite instead of
   duplicating;
-- W4 multi-query fan-out → `start_fanout` (one lineage, N sinks, each
-  with its own checkpoint).
+- W4 multi-query fan-out → one query per sink off the shared lineage
+  (e.g. one `parquet_append_sink` per medallion layer), each with its
+  own checkpoint.
 
 The upsert merges into a parquet table. Unpartitioned tables use a
 write-to-temp + atomic-rename swap (never overwrite-in-place, so a
@@ -985,21 +986,3 @@ def foreach_batch_upsert(
         .queryName(query_name)
         .start()
     )
-
-
-def start_fanout(sinks: Sequence[tuple[DataFrame, dict]]) -> list[StreamingQuery]:
-    """Start N streaming queries off (possibly shared) lineages.
-
-    Each entry is (df, writeStream-kwargs-like dict with 'format',
-    'outputMode', 'options', 'queryName'). Every query gets its own
-    checkpoint — the reference's W4 pattern.
-    """
-    queries = []
-    for df, spec in sinks:
-        writer = df.writeStream.format(spec["format"]).outputMode(spec["outputMode"])
-        for k, v in spec.get("options", {}).items():
-            writer = writer.option(k, v)
-        if "queryName" in spec:
-            writer = writer.queryName(spec["queryName"])
-        queries.append(writer.start())
-    return queries

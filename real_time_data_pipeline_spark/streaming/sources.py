@@ -1,15 +1,14 @@
 """Streaming source builders behind one interface (SURVEY §2.1 S1/S2).
 
 The reference hard-codes a Kafka source
-(`src/jobs/spark_streaming_job.py:51-59`); here Kafka, file-replay and
-rate sources share a builder so pipelines are source-agnostic:
+(`src/jobs/spark_streaming_job.py:51-59`); here Kafka and file-replay
+sources share a builder so pipelines are source-agnostic:
 
 - kafka:  production ingestion (same options as the reference —
   subscribe, startingOffsets, failOnDataLoss);
 - files:  deterministic replay of parquet/json drops — the test- and
   backfill-time twin of the Kafka feed (maxFilesPerTrigger paces
-  micro-batches);
-- rate:   synthetic load for soak tests.
+  micro-batches).
 
 The reference's HTTP poller (S1, `src/ingestion/producer.py:26-76`)
 is a NATIVE source here: `http_poll_stream` (backed by the Python
@@ -117,15 +116,6 @@ def file_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(path)
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Synthetic (timestamp, value) load generator."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )
 
 
 def http_poll_stream(

@@ -185,12 +185,8 @@ def _streaming_smoke(spark) -> str:
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from real_time_data_pipeline_spark.operators.windows import windowed_agg
     from real_time_data_pipeline_spark.sources.tables import load_table
-    from real_time_data_pipeline_spark.streaming.pipeline import (
-        default_gold_aggs,
-        gold_transform,
-        silver_transform,
-    )
     from real_time_data_pipeline_spark.streaming.sinks import parquet_append_sink
     from real_time_data_pipeline_spark.streaming.sources import file_stream
     from tests.oracle import assert_matches
@@ -215,8 +211,8 @@ def _streaming_smoke(spark) -> str:
     sent.to_parquet(os.path.join(replay, "b9_sentinel.parquet"), index=False)
 
     stream = file_stream(spark, replay, ev.schema, max_files_per_trigger=1)
-    gold = gold_transform(
-        silver_transform(stream, "ts"),
+    gold = windowed_agg(
+        stream,
         "ts", "15 minutes", ["event_type"],
         {
             "avg_value": F.round(F.avg("value"), 6),

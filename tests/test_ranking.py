@@ -13,6 +13,7 @@ from real_time_data_pipeline_spark.operators.ranking import (
     exact_ntile,
     global_row_number,
     grouped_exact_ntile,
+    grouped_percentile_cont,
     grouped_row_number,
 )
 
@@ -504,3 +505,11 @@ def test_grouped_row_number_and_ntile_null_groups_survive(spark):
         for r in df.withColumn("q", F.ntile(2).over(w)).collect()
     }
     assert got_nt == want_nt and len(got_nt) == 5
+
+
+def test_grouped_percentile_cont_rejects_empty_pcts(spark):
+    """No fractions is a caller error, reported before any plan is
+    built (not an opaque TypeError from filtering on ``None``)."""
+    df = _frame(spark, [(1, "a"), (2, "a")])
+    with pytest.raises(ValueError, match="pcts"):
+        grouped_percentile_cont(df, ["g"], "v", [], [])

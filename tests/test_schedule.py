@@ -81,7 +81,8 @@ def test_hourly_station_dag_end_to_end(spark, tmp_path):
         ("a", "6", None, "6", "1", "1", "1", "1715013245"),
         ("b", "2", None, "8", "1", "1", "1", "1715012400"),
     ]
-    raw = spark.createDataFrame(rows, STATION_STATUS_RAW_SCHEMA)
+    bronze_path = str(tmp_path / "bronze")
+    spark.createDataFrame(rows, STATION_STATUS_RAW_SCHEMA).write.parquet(bronze_path)
     silver_path = str(tmp_path / "silver")
     gold_path = str(tmp_path / "gold")
 
@@ -93,7 +94,7 @@ def test_hourly_station_dag_end_to_end(spark, tmp_path):
     open(os.path.join(stale, "part-0.parquet"), "wb").close()
 
     tasks, deps = hourly_station_dag(
-        spark, raw, silver_path, gold_path, ds="2024-05-06", keep_days=7,
+        spark, bronze_path, silver_path, gold_path, ds="2024-05-06", keep_days=7,
         retry_delay_s=0.0,
     )
     run = run_dag(tasks, deps, sleep=lambda s: None)

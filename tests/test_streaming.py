@@ -13,12 +13,9 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from real_time_data_pipeline_spark.operators.dedup import dedup_stream
+from real_time_data_pipeline_spark.operators.windows import windowed_agg
 from real_time_data_pipeline_spark.sources.tables import load_table
-from real_time_data_pipeline_spark.streaming.pipeline import (
-    default_gold_aggs,
-    gold_transform,
-    silver_transform,
-)
 from real_time_data_pipeline_spark.streaming.sinks import upsert_parquet
 from real_time_data_pipeline_spark.streaming.sources import file_stream
 
@@ -58,16 +55,21 @@ def _canon(df):
     return sorted(map(tuple, df.toPandas().astype(str).values.tolist()))
 
 
+def _gold(df, watermark_delay="2 hours"):
+    """15-minute per-event_type avg + count; the watermark is set on
+    streaming input only."""
+    return windowed_agg(
+        df, "ts", "15 minutes", ["event_type"],
+        {"avg_value": F.avg("value"), "n_events": F.count(F.lit(1))},
+        watermark_delay=watermark_delay if df.isStreaming else None,
+    )
+
+
 def test_stream_batch_parity_gold(spark, replay_dir):
     """Streaming gold (complete mode over file replay) == batch gold."""
     d, schema = replay_dir
     stream = file_stream(spark, d, schema, max_files_per_trigger=1)
-    aggs = default_gold_aggs("value")
-
-    gold_stream = gold_transform(
-        silver_transform(stream, "ts"),
-        "ts", "15 minutes", ["event_type"], aggs,
-    )
+    gold_stream = _gold(stream)
     _run_stream_to_memory(gold_stream, "gold_complete", "complete")
     got = spark.table("gold_complete").select(
         "window_start", "window_end", "event_type",
@@ -75,10 +77,7 @@ def test_stream_batch_parity_gold(spark, replay_dir):
     )
 
     batch = load_table(spark, "/root/testdata/sf0.001", "events")
-    want = gold_transform(
-        silver_transform(batch, "ts"),
-        "ts", "15 minutes", ["event_type"], aggs,
-    ).select(
+    want = _gold(batch).select(
         "window_start", "window_end", "event_type",
         F.round("avg_value", 6).alias("avg_value"), "n_events",
     )
@@ -90,18 +89,11 @@ def test_stream_append_mode_emits_closed_windows(spark, replay_dir):
     the batch result (the late tail stays open)."""
     d, schema = replay_dir
     stream = file_stream(spark, d, schema, max_files_per_trigger=1)
-    gold = gold_transform(
-        silver_transform(stream, "ts"),
-        "ts", "15 minutes", ["event_type"], default_gold_aggs("value"),
-        watermark_delay="30 minutes",
-    )
+    gold = _gold(stream, watermark_delay="30 minutes")
     _run_stream_to_memory(gold, "gold_append", "append")
     got = spark.table("gold_append")
     batch = load_table(spark, "/root/testdata/sf0.001", "events")
-    want = gold_transform(
-        silver_transform(batch, "ts"),
-        "ts", "15 minutes", ["event_type"], default_gold_aggs("value"),
-    )
+    want = _gold(batch)
     got_keys = {(str(r.window_start), r.event_type) for r in got.collect()}
     want_keys = {(str(r.window_start), r.event_type) for r in want.collect()}
     assert got_keys  # something closed
@@ -160,7 +152,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
         ]
     )
     stream = file_stream(spark, d, schema, max_files_per_trigger=1)
-    deduped = silver_transform(stream, "ts", dedup_keys=["k"], watermark_delay="1 hour")
+    deduped = dedup_stream(stream, ["k"], "ts", "1 hour")
     _run_stream_to_memory(deduped, "dedup_stream", "append")
     got = spark.table("dedup_stream")
     assert sorted(r.k for r in got.collect()) == [1, 2, 3, 4]
@@ -509,7 +501,7 @@ def test_streaming_dedup_with_rocksdb_state(spark, tmp_path):
             ]
         )
         stream = file_stream(spark, d, schema, max_files_per_trigger=1)
-        deduped = silver_transform(stream, "ts", dedup_keys=["k"], watermark_delay="1 hour")
+        deduped = dedup_stream(stream, ["k"], "ts", "1 hour")
         _run_stream_to_memory(deduped, "rocks_dedup", "append")
         got = sorted(r.k for r in spark.table("rocks_dedup").collect())
         assert got == [1, 2]  # duplicate k=1 dropped by RocksDB-backed state
@@ -593,7 +585,6 @@ def test_streaming_trending_topk_gold_snapshot(spark, replay_dir, tmp_path):
 
     d, schema = replay_dir
     gold = str(tmp_path / "trending_gold")
-    aggs = default_gold_aggs("value")
 
     def topk_of(df):
         w = W.partitionBy("window_start").orderBy(
@@ -606,9 +597,7 @@ def test_streaming_trending_topk_gold_snapshot(spark, replay_dir, tmp_path):
         )
 
     stream = file_stream(spark, d, schema, max_files_per_trigger=1)
-    counts = gold_transform(
-        silver_transform(stream, "ts"), "ts", "15 minutes", ["event_type"], aggs
-    )
+    counts = _gold(stream)
 
     def sink(batch_df, _batch_id):
         upsert_parquet(
@@ -625,11 +614,7 @@ def test_streaming_trending_topk_gold_snapshot(spark, replay_dir, tmp_path):
     q.stop()
 
     batch = load_table(spark, "/root/testdata/sf0.001", "events")
-    want = topk_of(
-        gold_transform(
-            silver_transform(batch, "ts"), "ts", "15 minutes", ["event_type"], aggs
-        )
-    )
+    want = topk_of(_gold(batch))
     got = spark.read.parquet(gold).select("window_start", "rank", "event_type", "n_events")
     assert _canon(got) == _canon(want)
 

@@ -324,12 +324,9 @@ def q_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ground-truth top-5 (3 recall consumers), and the covariance upper
 # triangle (2 queries). In production these are INDEX BUILDS —
 # trained once, served by every downstream query. The memo itself
-# lives in queries/artifacts.py (factored out in r9 so the graph
-# family can share the mechanism); re-exported here for back-compat.
-from real_time_data_pipeline_spark.queries.artifacts import (  # noqa: F401
-    _SHARED_ARTIFACTS,
+# lives in queries/artifacts.py, shared with the graph family.
+from real_time_data_pipeline_spark.queries.artifacts import (
     _shared_artifact,
-    clear_shared_artifacts,
     ingest_state_root,
 )
 

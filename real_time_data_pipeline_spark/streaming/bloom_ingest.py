@@ -23,9 +23,9 @@ column carries the last merged batch_id. The marker key stays
 fixed so exactly one marker row ever exists (the Count-Min
 convention, salt_id = -1). The merge emits the FULL next state
 (stored cells unioned with the batch's increments), so marker and
-cells commit in one whole-state staged-rename swap
-(`replace_parquet`); readers run the mid-swap crash recovery via
-`_read_state`.
+cells commit in one whole-state staged-rename swap through the
+shared marker-layout commit (`sinks.MarkedState`), whose reader runs
+the mid-swap crash recovery.
 
 Scale shape: per micro-batch one shingle explode + distinct over the
 batch's docs (the batch's own text volume is the only per-batch
@@ -50,11 +50,11 @@ from pyspark.sql.streaming import StreamingQuery
 # bit-identical by construction.
 from real_time_data_pipeline_spark.queries.text import BLOOM_BITS, BLOOM_SALTS
 from real_time_data_pipeline_spark.operators.text import hash32, word_shingles
-from real_time_data_pipeline_spark.streaming.sinks import read_state as _read_state
-from real_time_data_pipeline_spark.streaming.sinks import (
-    committed_marker_check,
-    replace_parquet,
-)
+from real_time_data_pipeline_spark.streaming.sinks import MarkedState, foreach_batch_sink
+
+# pos = -1 is the single marker row; its bid carries the last batch_id
+# (bid is 0 on every cell row)
+_STATE = MarkedState("pos bigint, bid bigint", "pos", -1, "bid")
 
 
 def _bloom_pos(col: Column, salt: str) -> Column:
@@ -77,9 +77,6 @@ def bloom_bit_increments(
     return out.distinct()
 
 
-_META_POS = -1  # fixed pos of the single last-batch-id marker row
-
-
 def merge_bloom_batch(
     batch_df: DataFrame,
     state_path: str,
@@ -91,38 +88,21 @@ def merge_bloom_batch(
     state; returns False for an already-merged (retried) batch_id
     (a no-op either way — union is idempotent — but skipping keeps
     the marker monotone and the write amplification zero)."""
-    spark = batch_df.sparkSession
-    stored = _read_state(spark, state_path)
-    cells = None
-    if stored is not None:
-        marker = (
-            stored.where(F.col("pos") == _META_POS)
-            .agg(F.max("bid").alias("last"))
-            .first()["last"]
-        )
-        if committed_marker_check(marker, batch_id):
-            return False  # foreachBatch retry of the committed batch
-        cells = stored.where(F.col("pos") >= 0).select("pos")
-    inc = bloom_bit_increments(batch_df, text_col, shingle_n)
-    merged = inc if cells is None else cells.unionByName(inc).distinct()
-    meta = spark.createDataFrame([(_META_POS, batch_id)], "pos bigint, bid bigint")
-    out = merged.select(
-        F.col("pos").cast("bigint"), F.lit(0).cast("bigint").alias("bid")
-    ).unionByName(meta)
-    # `out` carries every stored position (cells unioned in above), so
-    # the staged swap is a whole-state replace — no need to re-read
-    # the table for a keyed merge whose old side is fully overridden.
-    replace_parquet(out, state_path)
-    return True
+    return _STATE.merge(
+        batch_df.sparkSession,
+        state_path,
+        batch_id,
+        lambda: bloom_bit_increments(batch_df, text_col, shingle_n).withColumn(
+            "bid", F.lit(0)
+        ),
+        lambda cells, inc: cells.unionByName(inc).distinct(),
+    )
 
 
 def read_bloom(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed lit positions (marker row excluded),
     swap-recovered."""
-    stored = _read_state(spark, state_path)
-    if stored is None:
-        raise FileNotFoundError(f"no Bloom state at {state_path}")
-    return stored.where(F.col("pos") >= 0).select("pos")
+    return _STATE.read(spark, state_path, "Bloom").select("pos")
 
 
 def bloom_maybe_filter(
@@ -158,10 +138,4 @@ def bloom_ingest_sink(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_bloom_batch(batch_df, state_path, batch_id, text_col, shingle_n)
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)

@@ -76,7 +76,8 @@ from pyspark.sql.streaming import StreamingQuery
 from real_time_data_pipeline_spark.streaming.sinks import (
     commit_partitioned_batch,
     compact_partitioned_state,
-    state_exists_recovered as _state_exists_recovered,
+    foreach_batch_sink,
+    read_partitioned_state,
 )
 
 DEFAULT_TERM_BUCKETS = 64  # local-test size; a 100 TB corpus wants O(thousands)
@@ -177,10 +178,8 @@ def merge_corpus_stats_batch(
 
 
 def _read_state(spark: SparkSession, state_path: str) -> DataFrame:
-    if not _state_exists_recovered(spark, state_path):
-        raise FileNotFoundError(f"no corpus-stats state at {state_path}")
-    # exclude the compaction sentinel; scalar rows are a REAL bucket
-    return spark.read.parquet(state_path).where(F.col("bkt") >= 0)
+    # scalar rows are a REAL bucket; only the sentinel is excluded
+    return read_partitioned_state(spark, state_path, "bkt", "corpus-stats")
 
 
 def read_term_stats(spark: SparkSession, state_path: str) -> DataFrame:
@@ -481,10 +480,4 @@ def corpus_stats_ingest_sink(
             batch_df, state_path, batch_id, id_col, text_col, n_buckets
         )
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)

@@ -42,13 +42,10 @@ from pyspark.sql.streaming import StreamingQuery
 # the same structure by construction.
 from real_time_data_pipeline_spark.queries.text import CM_SALTS, CM_WIDTH
 from real_time_data_pipeline_spark.operators.text import hash32, words
-from real_time_data_pipeline_spark.streaming.sinks import read_state as _read_state
-from real_time_data_pipeline_spark.streaming.sinks import (
-    committed_marker_check,
-    replace_parquet,
-)
+from real_time_data_pipeline_spark.streaming.sinks import MarkedState, foreach_batch_sink
 
-_META_SALT = -1  # salt_id of the single last-batch-id marker row
+# salt_id = -1 is the single marker row; its bc carries the last batch_id
+_STATE = MarkedState("salt_id int, bucket bigint, bc bigint", "salt_id", -1, "bc")
 
 
 def sketch_increments(batch_df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -76,51 +73,22 @@ def merge_countmin_batch(
     batch_df: DataFrame, state_path: str, batch_id: int, text_col: str = "text"
 ) -> bool:
     """Merge one micro-batch into the sketch state; returns False for
-    an already-merged (retried) batch_id.
-
-    The stored cells and the batch increments sum cell-wise
-    (linearity); the new meta row replaces the old one through the
-    full-frame rewrite, so marker and cells commit in ONE swap.
-    """
-    spark = batch_df.sparkSession
-    stored = _read_state(spark, state_path)
-    cells = None
-    if stored is not None:
-        marker = (
-            stored.where(F.col("salt_id") == _META_SALT)
-            .agg(F.max("bc").alias("last"))
-            .first()["last"]
-        )
-        if committed_marker_check(marker, batch_id):
-            return False  # foreachBatch retry of the committed batch
-        cells = stored.where(F.col("salt_id") != _META_SALT)
-    inc = sketch_increments(batch_df, text_col)
-    merged = inc if cells is None else (
-        cells.unionByName(inc)
+    an already-merged (retried) batch_id. Stored cells and batch
+    increments sum cell-wise (linearity)."""
+    return _STATE.merge(
+        batch_df.sparkSession,
+        state_path,
+        batch_id,
+        lambda: sketch_increments(batch_df, text_col),
+        lambda cells, inc: cells.unionByName(inc)
         .groupBy("salt_id", "bucket")
-        .agg(F.sum("bc").cast("long").alias("bc"))
+        .agg(F.sum("bc").alias("bc")),
     )
-    meta = spark.createDataFrame(
-        [(_META_SALT, 0, batch_id)], "salt_id int, bucket bigint, bc bigint"
-    )
-    out = merged.select(
-        F.col("salt_id").cast("int"),
-        F.col("bucket").cast("bigint"),
-        F.col("bc").cast("bigint"),
-    ).unionByName(meta)
-    # The merged frame carries EVERY key, so the staged swap is a
-    # whole-state replace behind the sinks' crash-safe staged-rename
-    # swap (mid-swap crashes recovered by _read_state on next merge).
-    replace_parquet(out, state_path)
-    return True
 
 
 def read_sketch(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed sketch cells (meta row excluded), swap-recovered."""
-    stored = _read_state(spark, state_path)
-    if stored is None:
-        raise FileNotFoundError(f"no Count-Min state at {state_path}")
-    return stored.where(F.col("salt_id") != _META_SALT)
+    return _STATE.read(spark, state_path, "Count-Min")
 
 
 def heavy_hitters_estimate(
@@ -165,10 +133,4 @@ def countmin_ingest_sink(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_countmin_batch(batch_df, state_path, batch_id, text_col)
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)

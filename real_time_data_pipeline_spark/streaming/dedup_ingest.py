@@ -58,7 +58,11 @@ from real_time_data_pipeline_spark.operators.similarity import (
 )
 from real_time_data_pipeline_spark.operators.materialize import reliable_materialize
 from real_time_data_pipeline_spark.operators.text import word_shingles
-from real_time_data_pipeline_spark.streaming.sinks import table_exists, upsert_parquet
+from real_time_data_pipeline_spark.streaming.sinks import (
+    foreach_batch_sink,
+    table_exists,
+    upsert_parquet,
+)
 
 # Partition-bucket column shared by every state sub-table (and the
 # corpus). 64 buckets keeps local test tables small; a 100 TB corpus
@@ -300,10 +304,4 @@ def dedup_ingest_sink(
         ingest_batch(batch_df, id_col, text_col, corpus_path, store_path,
                      threshold=threshold, n_buckets=n_buckets)
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)

@@ -71,7 +71,8 @@ from pyspark.sql.streaming import StreamingQuery
 from real_time_data_pipeline_spark.streaming.sinks import (
     commit_partitioned_batch,
     compact_partitioned_state,
-    state_exists_recovered as _state_exists_recovered,
+    foreach_batch_sink,
+    read_partitioned_state,
 )
 
 DEFAULT_EDGE_BUCKETS = 8  # nation-grain local size; entity-grain graphs want O(thousands)
@@ -180,11 +181,8 @@ def read_trade_flows(spark: SparkSession, state_path: str) -> DataFrame:
     """The maintained weighted edge list: (src, dst, w_cents), deltas
     summed at read time (one row per edge after compaction; one per
     (edge, touched batch) before — the sum is the same)."""
-    if not _state_exists_recovered(spark, state_path):
-        raise FileNotFoundError(f"no trade-flow state at {state_path}")
     return (
-        spark.read.parquet(state_path)
-        .where(F.col("bkt") >= 0)  # exclude the compaction sentinel
+        read_partitioned_state(spark, state_path, "bkt", "trade-flow")
         .groupBy("src", "dst")
         .agg(F.sum("w_cents").alias("w_cents"))
     )
@@ -225,10 +223,4 @@ def trade_flow_ingest_sink(
             state_path, batch_id, n_buckets,
         )
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)

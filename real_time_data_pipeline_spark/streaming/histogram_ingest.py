@@ -29,14 +29,14 @@ parity contract (the NULL-timestamp lesson: name the exclusion,
 never let the two sides disagree silently).
 
 State: ONE parquet table of (bucket, cnt) rows plus a single marker
-row at the FIXED key ``bucket = _META_BUCKET`` (a sentinel far below
-any representable log bucket — real buckets can be negative for
-v < 1, so a sign test cannot separate the marker) whose ``cnt``
-column carries the last merged batch_id. Addition is not idempotent,
-so the marker IS required for exactly-once merges (the Count-Min
-argument), committed atomically with the cells through the
-staged-rename swap (`replace_parquet`); readers run the mid-swap crash
-recovery via `_read_state`.
+row at the FIXED key ``bucket = -10**9`` (a sentinel far below any
+representable log bucket — real buckets can be negative for v < 1,
+so a sign test cannot separate the marker) whose ``cnt`` column
+carries the last merged batch_id. Addition is not idempotent, so the
+marker IS required for exactly-once merges (the Count-Min argument),
+committed atomically with the cells through the shared marker-layout
+commit (`sinks.MarkedState`), whose reader runs the mid-swap crash
+recovery.
 
 Scale shape: per micro-batch one bucket-keyed partial aggregate
 (map-side combine, output ≤ occupied buckets), a tiny whole-state
@@ -57,15 +57,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from real_time_data_pipeline_spark.streaming.sinks import read_state as _read_state
-from real_time_data_pipeline_spark.streaming.sinks import (
-    committed_marker_check,
-    replace_parquet,
-)
+from real_time_data_pipeline_spark.streaming.sinks import MarkedState, foreach_batch_sink
 
 LOG2_DIVS = 8  # buckets per factor of 2; relative width 2^(1/8)-1 ~ 9%
-# far below floor(log2(min positive double) * LOG2_DIVS) ~ -8600:
-_META_BUCKET = -(10**9)
+# bucket = -10**9 is the single marker row (far below
+# floor(log2(min positive double) * LOG2_DIVS) ~ -8600); its cnt
+# carries the last batch_id
+_STATE = MarkedState("bucket bigint, cnt bigint", "bucket", -(10**9), "cnt")
 
 
 def value_bucket(col: Column) -> Column:
@@ -102,42 +100,21 @@ def merge_histogram_batch(
     for an already-merged (retried) batch_id — addition is not
     idempotent, so the in-table marker is what makes the foreachBatch
     retry exactly-once (the Count-Min argument)."""
-    spark = batch_df.sparkSession
-    stored = _read_state(spark, state_path)
-    cells = None
-    if stored is not None:
-        marker = (
-            stored.where(F.col("bucket") == _META_BUCKET)
-            .agg(F.max("cnt").alias("last"))
-            .first()["last"]
-        )
-        if committed_marker_check(marker, batch_id):
-            return False  # foreachBatch retry of the committed batch
-        cells = stored.where(F.col("bucket") != _META_BUCKET)
-    inc = histogram_increments(batch_df, value_col)
-    merged = inc if cells is None else (
-        cells.unionByName(inc)
+    return _STATE.merge(
+        batch_df.sparkSession,
+        state_path,
+        batch_id,
+        lambda: histogram_increments(batch_df, value_col),
+        lambda cells, inc: cells.unionByName(inc)
         .groupBy("bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+        .agg(F.sum("cnt").alias("cnt")),
     )
-    meta = spark.createDataFrame(
-        [(_META_BUCKET, batch_id)], "bucket bigint, cnt bigint"
-    )
-    out = merged.select(
-        F.col("bucket").cast("bigint"), F.col("cnt").cast("bigint")
-    ).unionByName(meta)
-    # whole-state replace behind the crash-safe staged-rename swap
-    replace_parquet(out, state_path)
-    return True
 
 
 def read_histogram(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed histogram cells (marker row excluded),
     swap-recovered."""
-    stored = _read_state(spark, state_path)
-    if stored is None:
-        raise FileNotFoundError(f"no histogram state at {state_path}")
-    return stored.where(F.col("bucket") != _META_BUCKET)
+    return _STATE.read(spark, state_path, "histogram")
 
 
 def quantile_estimates_of(cells: DataFrame, qs: list) -> DataFrame:
@@ -192,10 +169,4 @@ def histogram_ingest_sink(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_histogram_batch(batch_df, state_path, batch_id, value_col)
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)

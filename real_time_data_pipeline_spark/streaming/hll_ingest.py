@@ -32,8 +32,9 @@ makes the marker unnecessary for correctness (like Bloom, unlike
 Count-Min) — it is kept so all three twins share one exactly-once
 contract and the state carries its own progress watermark. The merge
 emits the FULL next state, so marker and cells commit in one
-whole-state staged-rename swap (`replace_parquet`); readers run the
-mid-swap crash recovery via `_read_state`.
+whole-state staged-rename swap through the shared marker-layout
+commit (`sinks.MarkedState`), whose reader runs the mid-swap crash
+recovery.
 
 Scale shape: per micro-batch one word explode + one reg-keyed MAX
 partial aggregate (map-side combine; output ≤ HLL_M rows), then a
@@ -57,16 +58,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from real_time_data_pipeline_spark.operators.text import hash60, words
-from real_time_data_pipeline_spark.streaming.sinks import read_state as _read_state
-from real_time_data_pipeline_spark.streaming.sinks import (
-    committed_marker_check,
-    replace_parquet,
-)
+from real_time_data_pipeline_spark.streaming.sinks import MarkedState, foreach_batch_sink
 
 HLL_P = 12  # register-index bits
 HLL_M = 1 << HLL_P  # 4096 registers; rsd = 1.04/sqrt(m) ~ 1.6%
 _TAIL_BITS = 60 - HLL_P  # hash60 leaves 48 tail bits for rho
-_META_REG = -1  # fixed reg of the single last-batch-id marker row
+# reg = -1 is the single marker row; its rho carries the last batch_id
+_STATE = MarkedState("reg bigint, rho bigint", "reg", -1, "rho")
 
 
 def _rho(tail: Column) -> Column:
@@ -111,41 +109,21 @@ def merge_hll_batch(
     returns False for an already-merged (retried) batch_id (a no-op
     either way — max is idempotent — but skipping keeps the marker
     monotone and the write amplification zero)."""
-    spark = batch_df.sparkSession
-    stored = _read_state(spark, state_path)
-    cells = None
-    if stored is not None:
-        marker = (
-            stored.where(F.col("reg") == _META_REG)
-            .agg(F.max("rho").alias("last"))
-            .first()["last"]
-        )
-        if committed_marker_check(marker, batch_id):
-            return False  # foreachBatch retry of the committed batch
-        cells = stored.where(F.col("reg") >= 0)
-    inc = hll_register_increments(batch_df, text_col)
-    merged = inc if cells is None else (
-        cells.unionByName(inc).groupBy("reg").agg(F.max("rho").alias("rho"))
+    return _STATE.merge(
+        batch_df.sparkSession,
+        state_path,
+        batch_id,
+        lambda: hll_register_increments(batch_df, text_col),
+        lambda cells, inc: cells.unionByName(inc)
+        .groupBy("reg")
+        .agg(F.max("rho").alias("rho")),
     )
-    meta = spark.createDataFrame([(_META_REG, batch_id)], "reg bigint, rho bigint")
-    out = merged.select(
-        F.col("reg").cast("bigint"), F.col("rho").cast("bigint")
-    ).unionByName(meta)
-    # The merged frame carries EVERY key, so the staged swap is a
-    # whole-state replace (mid-swap crashes recovered by _read_state
-    # on the next merge) — re-reading the table for a keyed merge
-    # would double the per-batch state I/O for nothing.
-    replace_parquet(out, state_path)
-    return True
 
 
 def read_registers(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed register cells (marker row excluded),
     swap-recovered."""
-    stored = _read_state(spark, state_path)
-    if stored is None:
-        raise FileNotFoundError(f"no HLL state at {state_path}")
-    return stored.where(F.col("reg") >= 0)
+    return _STATE.read(spark, state_path, "HLL")
 
 
 def hll_estimate_of(registers: DataFrame) -> float:
@@ -188,10 +166,4 @@ def hll_ingest_sink(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_hll_batch(batch_df, state_path, batch_id, text_col)
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)

@@ -24,7 +24,7 @@ scales with the BATCH, not the table (the marker twins' whole-state
 swap is right for sketch-sized state; an inverted index is
 vector-grain and must never rewrite itself per batch). The committed
 max batch id the reset guard needs comes from a DRIVER-SIDE
-partition-directory listing (`_committed_max_batch`), never a data
+partition-directory listing (`sinks.committed_max_batch`), never a data
 scan — O(partition dirs), kept small by compaction.
 
 The one failure the overwrite cannot self-heal is a checkpoint RESET
@@ -87,15 +87,15 @@ from real_time_data_pipeline_spark.operators.similarity import (
     norm,
     quantize_embedding,
 )
-# The state scaffolding — swap-recovering existence check, committed-
-# max-batch directory scan, the guarded dynamic-overwrite commit, and
-# the sentinel-preserving compaction — is the SHARED partitioned-twin
-# helper set in sinks.py (extracted r12, VERDICT r11 #5); this module
-# keeps only the IVF-specific pieces (assignment, probes, readers).
+# The state protocol — the guarded dynamic-overwrite commit, the
+# sentinel-excluding reader and the compaction — is the shared
+# partitioned layout in sinks.py; this module keeps only the
+# IVF-specific pieces (assignment, probes, readers).
 from real_time_data_pipeline_spark.streaming.sinks import (
     commit_partitioned_batch,
-    compact_partitioned_state,
-    state_exists_recovered as _state_exists_recovered,
+    compact_partitioned_state as compact_partitioned_state,  # re-export
+    foreach_batch_sink,
+    read_partitioned_state,
 )
 
 
@@ -157,26 +157,9 @@ def read_ivf_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed inverted lists: (cent_id, nid, lo, scale, q).
     Runs swap recovery first; the compaction guard sentinel
     (cent_id = -1) is excluded."""
-    if not _state_exists_recovered(spark, state_path):
-        raise FileNotFoundError(f"no IVF state at {state_path}")
-    return (
-        spark.read.parquet(state_path)
-        .where(F.col("cent_id") >= 0)
-        .select(
-            F.col("cent_id").cast("bigint"),
-            "nid",
-            "lo",
-            "scale",
-            "q",
-        )
+    return read_partitioned_state(spark, state_path, "cent_id", "IVF").select(
+        F.col("cent_id").cast("bigint"), "nid", "lo", "scale", "q"
     )
-
-
-def compact_ivf_state(spark: SparkSession, state_path: str) -> None:
-    """Back-compat alias for the eighth twin's original name (the
-    generic row-preserving compaction lives in
-    `sinks.compact_partitioned_state`)."""
-    compact_partitioned_state(spark, state_path)
 
 
 def probe_lists(
@@ -285,10 +268,4 @@ def ivf_ingest_sink(
             batch_df, state_path, batch_id, centroids, id_col, vec_col
         )
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)

@@ -4,7 +4,7 @@ prunes WHICH vectors a query scores, PQ compresses HOW each one is
 scored), maintained incrementally.
 
 Ninth twin, built on the eighth's structural-idempotency commit
-(`ivf_ingest.commit_partitioned_batch`): both the coarse assignment
+(`sinks.commit_partitioned_batch`): both the coarse assignment
 (nearest frozen centroid, exact cosine, deterministic tie-break) and
 the PQ encoding (per-subspace nearest frozen codeword by QUANTIZED
 squared L2 — `operators/similarity.py::pq_codebooks`' integer-exact
@@ -61,7 +61,8 @@ from real_time_data_pipeline_spark.operators.similarity import (
 from real_time_data_pipeline_spark.streaming.ivf_ingest import probe_lists
 from real_time_data_pipeline_spark.streaming.sinks import (
     commit_partitioned_batch,
-    state_exists_recovered as _state_exists_recovered,
+    foreach_batch_sink,
+    read_partitioned_state,
 )
 
 _QUANT = 1_000_000  # must match the codebooks' training quant
@@ -156,12 +157,8 @@ def read_ivfpq_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed code lists: (cent_id, nid, codes). Runs swap
     recovery first; the compaction guard sentinel (cent_id = -1) is
     excluded."""
-    if not _state_exists_recovered(spark, state_path):
-        raise FileNotFoundError(f"no IVF-PQ state at {state_path}")
-    return (
-        spark.read.parquet(state_path)
-        .where(F.col("cent_id") >= 0)
-        .select(F.col("cent_id").cast("bigint"), "nid", "codes")
+    return read_partitioned_state(spark, state_path, "cent_id", "IVF-PQ").select(
+        F.col("cent_id").cast("bigint"), "nid", "codes"
     )
 
 
@@ -253,10 +250,4 @@ def ivfpq_ingest_sink(
             id_col, vec_col, m_sub, sub_dim,
         )
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)

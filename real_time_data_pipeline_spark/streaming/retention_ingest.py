@@ -40,7 +40,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from real_time_data_pipeline_spark.streaming.sinks import (
     _swap_paths,
-    read_state as _read_state,  # noqa: F401 — shared reader (moved to sinks r12)
+    foreach_batch_sink,
+    read_state as _read_state,
     upsert_parquet,
 )
 
@@ -99,13 +100,7 @@ def retention_ingest_sink(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_retention_batch(batch_df, state_root)
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)
 
 
 def retention_matrix(spark: SparkSession, state_root: str) -> DataFrame:

@@ -11,6 +11,10 @@ Reference sinks rebuilt (SURVEY §2.2):
   (e.g. one `parquet_append_sink` per medallion layer), each with its
   own checkpoint.
 
+Every foreachBatch sink in the package starts through
+`foreach_batch_sink`, and the streaming twins' exactly-once state
+commits (`MarkedState`, `commit_partitioned_batch`) live here too.
+
 The upsert merges into a parquet table. Unpartitioned tables use a
 write-to-temp + atomic-rename swap (never overwrite-in-place, so a
 crash mid-write cannot lose committed rows); partitioned tables merge
@@ -26,11 +30,13 @@ contract and keying logic are identical.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from real_time_data_pipeline_spark.operators.materialize import reliable_materialize
 
@@ -69,6 +75,25 @@ def parquet_append_sink(
         .queryName(query_name)
     )
     return with_trigger(writer, trigger).start()
+
+
+def foreach_batch_sink(
+    df: DataFrame,
+    body,
+    checkpoint: str,
+    query_name: str,
+    output_mode: str = "append",
+) -> StreamingQuery:
+    """Start ``df`` as a foreachBatch query running
+    ``body(batch_df, batch_id)`` per micro-batch, with its own
+    checkpoint — the one starter every merge sink in the package uses."""
+    return (
+        df.writeStream.foreachBatch(body)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .queryName(query_name)
+        .start()
+    )
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -211,23 +236,18 @@ def replace_parquet(df: DataFrame, path: str) -> None:
 
 
 def committed_marker_check(marker, batch_id: int) -> bool:
-    """The sketch twins' exactly-once contract in ONE place (every
-    twin stores its last-merged foreachBatch batch_id as an in-table
-    marker row): returns True when ``batch_id`` equals the committed
-    ``marker`` — a foreachBatch RETRY of the already-merged batch,
-    which the caller must skip (idempotent either way, but skipping
-    keeps the marker monotone and the write amplification zero) — and
-    False when the batch is new (marker is None or batch_id is
-    ahead).
+    """The exactly-once guard shared by both state layouts below:
+    returns True when ``batch_id`` equals the committed ``marker`` — a
+    foreachBatch RETRY of the already-merged batch — and False when
+    the batch is new (marker is None or batch_id is ahead).
 
     A batch id BELOW the committed marker cannot be a retry
     (foreachBatch re-delivers the same id): the stream's checkpoint
     was reset against existing state. Skipping would silently drop
     those batches' data forever, so this raises instead — the
     operator must delete/repoint either the state path or the
-    checkpointLocation. Previously each twin hand-copied this guard
-    (ADVICE r10); `tests/test_streaming.py`'s
-    checkpoint-reset tests pin the shared contract for all of them.
+    checkpointLocation. `tests/test_streaming.py`'s checkpoint-reset
+    tests pin the contract for every twin.
     """
     if marker is None:
         return False
@@ -243,22 +263,17 @@ def committed_marker_check(marker, batch_id: int) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Shared twin-state scaffolding (r12, VERDICT r11 #5). Two state layouts
-# exist across the ten streaming twins, and BOTH read their pieces from
-# this one helper set:
+# Exactly-once state layouts. Every twin whose merge is not a keyed
+# `upsert_parquet` keeps its state in one of two layouts, and each
+# layout's commit protocol lives only here:
 #
-# - whole-state swap twins (the marker family: funnel, sessionization,
-#   distinct, retention, dedup, Count-Min, Bloom, HLL, log-histogram,
-#   zone-map): `read_state` + `committed_marker_check` +
-#   `replace_parquet`/`upsert_parquet`.
-# - (key, src_batch)-partitioned twins (IVF lists, IVF-PQ codes, corpus
-#   statistics): `committed_max_batch` + `commit_partitioned_batch` +
-#   `compact_partitioned_state`, all built on the same swap recovery.
-#
-# Before r12 each partitioned twin re-derived the marker-read /
-# compaction-sentinel / retry-guard logic module-locally and the marker
-# twins imported `_read_state` from retention_ingest (one twin reaching
-# into another's privates).
+# - marker layout (Count-Min, Bloom, HLL, log-histogram, zone-map
+#   stats): one small table rewritten whole per batch, carrying the last
+#   merged batch_id in a sentinel-key row — `MarkedState`.
+# - (key, src_batch)-partitioned layout (IVF lists, IVF-PQ codes,
+#   corpus statistics, trade flows): append-only per-batch partitions —
+#   `commit_partitioned_batch`, `read_partitioned_state`,
+#   `compact_partitioned_state`.
 # ---------------------------------------------------------------------------
 
 COMPACTED_BATCH = -1  # src_batch value reserved for compaction output
@@ -282,11 +297,86 @@ def read_state(spark: SparkSession, path: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
+@dataclass(frozen=True)
+class MarkedState:
+    """The marker layout: a whole-state table with columns
+    ``schema_ddl`` whose ONE row at ``key_col = meta_key`` carries the
+    last merged foreachBatch batch_id in ``marker_col`` (its other
+    columns are not read). Keeping the marker INSIDE the
+    swap-committed table makes retry detection atomic with the merge,
+    so non-idempotent merges (sums) apply exactly once."""
+
+    schema_ddl: str
+    key_col: str
+    meta_key: object
+    marker_col: str
+
+    def _cells(self, stored: DataFrame) -> DataFrame:
+        return stored.where(F.col(self.key_col) != F.lit(self.meta_key))
+
+    def merge(
+        self, spark: SparkSession, path: str, batch_id: int, increments, fold
+    ) -> bool:
+        """Merge one batch; returns False for an already-merged
+        (retried) ``batch_id``. ``increments()`` builds the batch's
+        cells and runs only once the marker check has passed;
+        ``fold(stored_cells, inc)`` combines them into the complete
+        next state, which replaces the table together with the new
+        marker row in one staged-rename swap."""
+        stored = read_state(spark, path)
+        cells = None
+        if stored is not None:
+            marker = (
+                stored.where(F.col(self.key_col) == F.lit(self.meta_key))
+                .agg(F.max(self.marker_col))
+                .first()[0]
+            )
+            if committed_marker_check(marker, batch_id):
+                return False  # foreachBatch retry of the committed batch
+            cells = self._cells(stored)
+        inc = increments()
+        merged = inc if cells is None else fold(cells, inc)
+        schema = StructType.fromDDL(self.schema_ddl)
+        meta = spark.createDataFrame(
+            [
+                tuple(
+                    self.meta_key if f.name == self.key_col
+                    else batch_id if f.name == self.marker_col
+                    else None
+                    for f in schema.fields
+                )
+            ],
+            schema,
+        )
+        out = merged.select(
+            *[F.col(f.name).cast(f.dataType) for f in schema.fields]
+        ).unionByName(meta)
+        replace_parquet(out, path)
+        return True
+
+    def read(self, spark: SparkSession, path: str, what: str) -> DataFrame:
+        """The committed cells (marker row excluded), swap-recovered."""
+        stored = read_state(spark, path)
+        if stored is None:
+            raise FileNotFoundError(f"no {what} state at {path}")
+        return self._cells(stored)
+
+
 def state_exists_recovered(spark: SparkSession, state_path: str) -> bool:
     """Existence check that FIRST runs the swap-commit crash recovery.
     Every partitioned-state entry point — merge, read, probe, compact
     — goes through here, per the swap-commit contract."""
     return _swap_paths(spark, state_path)[5]
+
+
+def read_partitioned_state(
+    spark: SparkSession, state_path: str, key_col: str, what: str
+) -> DataFrame:
+    """The committed rows of a (key_col, src_batch)-partitioned state,
+    swap-recovered, with the compaction sentinel (key < 0) excluded."""
+    if not state_exists_recovered(spark, state_path):
+        raise FileNotFoundError(f"no {what} state at {state_path}")
+    return spark.read.parquet(state_path).where(F.col(key_col) >= 0)
 
 
 def committed_max_batch(spark: SparkSession, state_path: str):
@@ -369,7 +459,15 @@ def commit_partitioned_batch(
     vector-index twins, ``bkt`` (term hash bucket) for the corpus-
     stats twin — any non-negative integer key works; negative values
     are reserved for the compaction sentinel."""
-    spark = inc.sparkSession
+    _guard_partitioned_batch(inc.sparkSession, state_path, batch_id, key_col)
+    _write_partitioned_batch(inc, state_path, batch_id, key_col)
+    return True
+
+
+def _guard_partitioned_batch(
+    spark: SparkSession, state_path: str, batch_id: int, key_col: str
+) -> None:
+    """`commit_partitioned_batch`'s reset and compacted-retry checks."""
     stored_max = committed_max_batch(spark, state_path)
     committed_marker_check(stored_max, batch_id)
     if (
@@ -385,6 +483,12 @@ def commit_partitioned_batch(
             f"the stream fully committed; restore the pre-compaction "
             f"state or rebuild from the corpus."
         )
+
+
+def _write_partitioned_batch(
+    inc: DataFrame, state_path: str, batch_id: int, key_col: str
+) -> None:
+    """Write ``inc`` as its (key_col, src_batch=batch_id) partitions."""
     (
         inc.withColumn("src_batch", F.lit(batch_id).cast("bigint"))
         # Cluster by the partition key before the write (guide §6,
@@ -402,64 +506,45 @@ def commit_partitioned_batch(
         .partitionBy(key_col, "src_batch")
         .parquet(state_path)
     )
-    return True
 
 
 def commit_partitioned_batches_overlapped(
     slices: "list[DataFrame]",
     state_path: str,
     key_col: str = "cent_id",
-    max_workers: int = 2,
 ) -> None:
     """Replay a KNOWN-FINAL batch sequence through the guarded commit
-    with the writes overlapped (guide §2.6: independent jobs from a
-    small thread pool back-fill each other's task tails).
+    with the writes overlapped (independent jobs from a two-thread
+    pool back-fill each other's task tails).
 
-    ``slices[b]`` commits as batch id ``b`` via the same
-    `commit_partitioned_batch` a live foreachBatch uses. Overlap is
-    safe HERE and only here: the batches touch disjoint
-    (key, src_batch=b) partitions (distinct staging dirs, no partition
-    overlap for dynamic-overwrite to collide on), and each batch's
-    guard is read INLINE in submission order — when batch b's guard
-    runs, only writes 0..b−1 have been submitted, so the observed
-    stored_max is at most b−1 and the ``batch_id < stored_max`` reset
-    check can never false-fire. Only the WRITE jobs overlap. A live
-    stream must keep the strictly sequential `commit_partitioned_*`
-    path — micro-batches there are not known-final.
+    ``slices[b]`` commits as batch id ``b`` through the same guard and
+    write as `commit_partitioned_batch`. Each batch's guard runs
+    INLINE in submission order — when batch b's guard runs, only
+    writes 0..b−1 have been submitted, so the observed stored_max is
+    at most b−1 and the ``batch_id < stored_max`` reset check can
+    never false-fire. Only the WRITE jobs overlap. A live stream must
+    keep the strictly sequential `commit_partitioned_batch` path —
+    micro-batches there are not known-final.
 
-    Used by the ingest-state ARTIFACT builds (VERDICT r15 #4): the
-    replay's wall-clock was dominated by serial per-commit write jobs.
+    Filesystem assumption: overlapping two dynamic-overwrite writes
+    into one table is safe only because the batches touch disjoint
+    (key, src_batch=b) partitions and Hadoop's default file committer
+    stages each job in its own ``.spark-staging-<jobId>`` directory
+    before renaming its partitions into place. Object-store committers
+    (S3A magic/staging, cloud manifest committers) do not give that
+    isolation, so this must not target an object store. Used by the
+    ingest-state artifact builds in ``queries/``.
     """
     from concurrent.futures import ThreadPoolExecutor
 
     spark = slices[0].sparkSession
-    # sequential guards, overlapped writes: run the guard inline, then
-    # hand the write to the pool
-    def _write(inc: DataFrame, batch_id: int) -> None:
-        (
-            inc.withColumn("src_batch", F.lit(batch_id).cast("bigint"))
-            .repartition(F.col(key_col), F.col("src_batch"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(key_col, "src_batch")
-            .parquet(state_path)
-        )
-
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+    with ThreadPoolExecutor(max_workers=2) as pool:
         futures = []
         for b, inc in enumerate(slices):
-            stored_max = committed_max_batch(spark, state_path)
-            committed_marker_check(stored_max, b)
-            if (
-                stored_max is not None
-                and b == stored_max
-                and not live_batch_partitions_exist(spark, state_path, b, key_col)
-            ):
-                raise ValueError(
-                    f"retry of batch {b} arrived after compaction folded "
-                    f"its partitions (see commit_partitioned_batch)"
-                )
-            futures.append(pool.submit(_write, inc, b))
+            _guard_partitioned_batch(spark, state_path, b, key_col)
+            futures.append(
+                pool.submit(_write_partitioned_batch, inc, state_path, b, key_col)
+            )
         for f in futures:
             f.result()  # propagate the first failure
 
@@ -896,13 +981,7 @@ def foreach_batch_cdc(
             batch_df, path, keys, order_cols, tombstone_col, n_buckets=n_buckets
         )
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)
 
 
 def delta_available(spark: SparkSession) -> bool:
@@ -979,10 +1058,4 @@ def foreach_batch_upsert(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         upsert_parquet(batch_df, path, keys, order_col, partition_cols)
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name, output_mode="update")

@@ -55,21 +55,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from real_time_data_pipeline_spark.streaming.sinks import read_state as _read_state
 from real_time_data_pipeline_spark.streaming.sinks import (
-    committed_marker_check,
-    replace_parquet,
+    MarkedState,
+    foreach_batch_sink,
+    read_state,
     upsert_parquet,
 )
 
-# Sentinel partition value for the exactly-once marker row. Real
-# part_date values are 'yyyy-MM-dd' strings; a NUL-prefixed name can
-# never collide with one.
-_META_DATE = "\x00meta"
-
-_STATS_SCHEMA = (
+# part_date = NUL-prefixed "meta" is the single marker row (real
+# part_date values are 'yyyy-MM-dd' strings, so it can never collide);
+# its n_rows carries the last batch_id
+_STATS = MarkedState(
     "part_date string, n_rows bigint, min_event_id bigint, "
-    "max_event_id bigint, min_value double, max_value double"
+    "max_event_id bigint, min_value double, max_value double",
+    "part_date",
+    "\x00meta",
+    "n_rows",
 )
 
 
@@ -118,63 +119,38 @@ def merge_zonemap_batch(
     for an already-merged (retried) batch_id.
 
     Write order is the crash-safety argument: the idempotent pair
-    upsert runs BEFORE the marker-protected stats swap, so a retry
-    after a crash between the two re-upserts the same pairs (no-op)
-    and then merges the counts exactly once.
+    upsert runs after the marker check and BEFORE the marker-protected
+    stats swap, so a retry after a crash between the two re-upserts
+    the same pairs (no-op) and then merges the counts exactly once.
     """
-    spark = batch_df.sparkSession
-    stored = _read_state(spark, stats_path)
-    cells = None
-    if stored is not None:
-        marker = (
-            stored.where(F.col("part_date") == _META_DATE)
-            .agg(F.max("n_rows").alias("last"))
-            .first()["last"]
+
+    def increments() -> DataFrame:
+        upsert_parquet(
+            zonemap_user_pairs(batch_df), users_path, keys=["part_date", "user_id"]
         )
-        if committed_marker_check(marker, batch_id):
-            return False  # foreachBatch retry of the committed batch
-        cells = stored.where(F.col("part_date") != _META_DATE)
+        return zonemap_increments(batch_df)
 
-    # idempotent half first (see docstring)
-    upsert_parquet(
-        zonemap_user_pairs(batch_df), users_path, keys=["part_date", "user_id"]
-    )
-
-    inc = zonemap_increments(batch_df)
-    merged = inc if cells is None else (
-        cells.unionByName(inc)
+    return _STATS.merge(
+        batch_df.sparkSession,
+        stats_path,
+        batch_id,
+        increments,
+        lambda cells, inc: cells.unionByName(inc)
         .groupBy("part_date")
         .agg(
-            F.sum("n_rows").cast("long").alias("n_rows"),
+            F.sum("n_rows").alias("n_rows"),
             F.min("min_event_id").alias("min_event_id"),
             F.max("max_event_id").alias("max_event_id"),
             F.min("min_value").alias("min_value"),
             F.max("max_value").alias("max_value"),
-        )
+        ),
     )
-    meta = spark.createDataFrame(
-        [(_META_DATE, batch_id, None, None, None, None)], _STATS_SCHEMA
-    )
-    out = merged.select(
-        F.col("part_date").cast("string"),
-        F.col("n_rows").cast("bigint"),
-        F.col("min_event_id").cast("bigint"),
-        F.col("max_event_id").cast("bigint"),
-        F.col("min_value").cast("double"),
-        F.col("max_value").cast("double"),
-    ).unionByName(meta)
-    # whole-state replace behind the crash-safe staged-rename swap
-    replace_parquet(out, stats_path)
-    return True
 
 
 def read_zonemap_stats(spark: SparkSession, stats_path: str) -> DataFrame:
     """The committed stats cells (marker row excluded),
     swap-recovered."""
-    stored = _read_state(spark, stats_path)
-    if stored is None:
-        raise FileNotFoundError(f"no zonemap state at {stats_path}")
-    return stored.where(F.col("part_date") != _META_DATE)
+    return _STATS.read(spark, stats_path, "zonemap")
 
 
 def read_zonemap(
@@ -186,7 +162,7 @@ def read_zonemap(
     state (partition-grain aggregate of a per-key table; never a
     fact-table rescan)."""
     stats = read_zonemap_stats(spark, stats_path)
-    users = _read_state(spark, users_path)
+    users = read_state(spark, users_path)
     counts = (
         users.groupBy("part_date").agg(
             F.count(F.lit(1)).alias("n_users")
@@ -220,10 +196,4 @@ def zonemap_ingest_sink(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_zonemap_batch(batch_df, stats_path, users_path, batch_id)
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return foreach_batch_sink(df, _sink, checkpoint, query_name)

@@ -184,9 +184,11 @@ def measure_ivf(spark, emb, n_batches: int) -> dict:
         stride_centroids,
     )
     from real_time_data_pipeline_spark.streaming.ivf_ingest import (
-        compact_ivf_state,
         ivf_probe_state,
         merge_ivf_batch,
+    )
+    from real_time_data_pipeline_spark.streaming.sinks import (
+        compact_partitioned_state,
     )
 
     cents = stride_centroids(emb, "vec_id", "embedding").localCheckpoint()
@@ -200,7 +202,7 @@ def measure_ivf(spark, emb, n_batches: int) -> dict:
         probe_fn=lambda s: ivf_probe_state(
             spark, s, probes, cents, k=10, nprobe=4
         ).collect(),
-        compact_fn=lambda s: compact_ivf_state(spark, s),
+        compact_fn=lambda s: compact_partitioned_state(spark, s),
     )
 
 

@@ -6,7 +6,10 @@ runs — and the scripts under ``scripts/`` never run in this suite.
 This walks the source with ``ast`` instead: each
 ``from real_time_data_pipeline_spark... import name`` anywhere in the
 package or the scripts must name a module that imports and an
-attribute (or submodule) that exists. No Spark session is needed.
+attribute (or submodule) that exists, and every name it binds must be
+used in that module. Re-exports are declared, not inferred: the
+``import name as name`` form (PEP 484's explicit re-export) and
+``__init__.py`` files are exempt. No Spark session is needed.
 """
 
 import ast
@@ -25,9 +28,12 @@ def _sources():
                     yield os.path.join(dirpath, f)
 
 
-def _package_imports(path):
+def _parse(path):
     with open(path, encoding="utf-8") as fh:
-        tree = ast.parse(fh.read(), filename=path)
+        return ast.parse(fh.read(), filename=path)
+
+
+def _package_imports(tree):
     for node in ast.walk(tree):
         if (
             isinstance(node, ast.ImportFrom)
@@ -36,7 +42,7 @@ def _package_imports(path):
             and node.module.split(".")[0] == PACKAGE
         ):
             for alias in node.names:
-                yield node.lineno, node.module, alias.name
+                yield node.lineno, node.module, alias
 
 
 def _resolves(module, name):
@@ -53,7 +59,8 @@ def _resolves(module, name):
 def test_package_imports_resolve():
     checked, broken = 0, []
     for path in _sources():
-        for lineno, module, name in _package_imports(path):
+        for lineno, module, alias in _package_imports(_parse(path)):
+            name = alias.name
             checked += 1
             try:
                 ok = _resolves(module, name)
@@ -63,3 +70,17 @@ def test_package_imports_resolve():
                 broken.append(f"{os.path.relpath(path, ROOT)}:{lineno}: {module}.{name}")
     assert checked > 100  # the walk really found the package's imports
     assert not broken, "\n".join(broken)
+
+
+def test_package_imports_are_used():
+    unused = []
+    for path in _sources():
+        if os.path.basename(path) == "__init__.py":
+            continue
+        tree = _parse(path)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for lineno, module, alias in _package_imports(tree):
+            bound = alias.asname or alias.name
+            if bound not in used and bound != "*" and alias.asname != alias.name:
+                unused.append(f"{os.path.relpath(path, ROOT)}:{lineno}: {module}.{alias.name}")
+    assert not unused, "\n".join(unused)

@@ -790,7 +790,7 @@ def test_shared_artifact_memo_builds_once_and_keys_by_sf(spark, sf_dir):
     anything in the tracked-cache registry (release_caches must not
     be able to unpersist a shared index)."""
     from real_time_data_pipeline_spark.operators import materialize
-    from real_time_data_pipeline_spark.queries.similarity import (
+    from real_time_data_pipeline_spark.queries.artifacts import (
         _SHARED_ARTIFACTS,
         _shared_artifact,
     )

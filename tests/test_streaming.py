@@ -2293,10 +2293,12 @@ def test_ivf_ingest_parity_retry_reset_probe_and_compaction(spark, tmp_path):
         stride_centroids,
     )
     from real_time_data_pipeline_spark.streaming.ivf_ingest import (
-        compact_ivf_state,
         ivf_probe_state,
         ivf_state_build,
         merge_ivf_batch,
+    )
+    from real_time_data_pipeline_spark.streaming.sinks import (
+        compact_partitioned_state,
     )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -2340,7 +2342,7 @@ def test_ivf_ingest_parity_retry_reset_probe_and_compaction(spark, tmp_path):
     # compaction: rows + probes identical, next live batch still
     # lands, and the sentinel row PRESERVES the reset guard (max
     # src_batch stays 2, so a recycled id still fails loudly)
-    compact_ivf_state(spark, state)
+    compact_partitioned_state(spark, state)
     assert _ivf_state_rows(spark, state) == want
     assert {
         tuple(r)
@@ -2842,6 +2844,67 @@ def test_compact_partitioned_state_recompaction_keeps_guard(spark, tmp_path):
     assert rows == {(0, 1), (1, 2)}
     with _pytest.raises(ValueError, match="checkpoint/state mismatch"):
         commit_partitioned_batch(inc, state, 1)
+
+
+def test_overlapped_commit_matches_sequential_and_keeps_guards(spark, tmp_path):
+    """The overlapped known-final replay runs the same guard and write
+    as the live commit: three slices leave exactly the rows of a
+    sequential `commit_partitioned_batch` replay, a replay over state
+    with a higher committed max is a checkpoint reset, and a same-id
+    replay after compaction raises instead of re-adding folded rows."""
+    import pytest as _pytest
+
+    from real_time_data_pipeline_spark.streaming.sinks import (
+        commit_partitioned_batch,
+        commit_partitioned_batches_overlapped,
+        committed_max_batch,
+        compact_partitioned_state,
+    )
+
+    rows = [(c, n) for c in range(4) for n in range(c * 10, c * 10 + 6)]
+    inc = spark.createDataFrame(rows, "cent_id long, nid long")
+    slices = [inc.where(F.pmod("nid", F.lit(3)) == b) for b in range(3)]
+
+    def state_rows(path):
+        return sorted(
+            tuple(r)
+            for r in spark.read.parquet(path)
+            .select("cent_id", "nid", "src_batch")
+            .collect()
+        )
+
+    sequential = str(tmp_path / "sequential")
+    for b, s in enumerate(slices):
+        assert commit_partitioned_batch(s, sequential, b) is True
+    overlapped = str(tmp_path / "overlapped")
+    commit_partitioned_batches_overlapped(slices, overlapped)
+    assert state_rows(overlapped) == state_rows(sequential)
+    assert len(state_rows(overlapped)) == len(rows)
+    assert committed_max_batch(spark, overlapped) == 2
+
+    # committed max above the replay's first id: checkpoint reset
+    ahead = str(tmp_path / "ahead")
+    commit_partitioned_batch(slices[0], ahead, 5)
+    with _pytest.raises(ValueError, match="checkpoint/state mismatch"):
+        commit_partitioned_batches_overlapped(slices, ahead)
+
+    # after compaction the replayed sequence must not land again
+    compact_partitioned_state(spark, overlapped)
+    with _pytest.raises(ValueError, match="checkpoint/state mismatch"):
+        commit_partitioned_batches_overlapped(slices, overlapped)
+    # same id as the compacted newest batch: the compacted-retry guard
+    single = str(tmp_path / "single")
+    commit_partitioned_batches_overlapped(slices[:1], single)
+    compact_partitioned_state(spark, single)
+    with _pytest.raises(ValueError, match="compacted away"):
+        commit_partitioned_batches_overlapped(slices[:1], single)
+    assert sorted(
+        tuple(r)
+        for r in spark.read.parquet(single)
+        .where(F.col("cent_id") >= 0)
+        .select("cent_id", "nid")
+        .collect()
+    ) == sorted(tuple(r) for r in slices[0].collect())
 
 
 def test_corpus_stats_ingest_sink_end_to_end(spark, tmp_path):
